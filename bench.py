@@ -17,7 +17,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from xml_to_sqlite3_spark.session import get_spark  # noqa: E402
+from xml_to_sqlite3_spark.cache_util import warm_gate_stores  # noqa: E402
+from xml_to_sqlite3_spark.session import get_spark, release_session_state  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -55,69 +56,20 @@ def main() -> None:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
 
-    # Materialize the node-graph cache as its own explicit bench
-    # entry (counted in the total) — the reference's model is
-    # build-the-database-once, query-many-times, and without this
-    # the one-time ~18M-row xref materialization would be silently
-    # attributed to whichever graph query happens to run first.
-    from xml_to_sqlite3_spark.plans.node_graph import get_graph
+    # Materialize the shared stores (node graph, MinHash, near-dup
+    # components) as their own explicit bench entries (counted in the
+    # total) — the reference's model is build-the-database-once,
+    # query-many-times, and without this each one-time build would
+    # be silently attributed to whichever gate happens to run first.
+    for name, res in warm_gate_stores(spark, sf_dir).items():
+        if isinstance(res, Exception):
+            errors[name] = (str(res) or repr(res)).splitlines()[0][:300]
+        else:
+            timings[name] = round(res, 4)
 
-    t0 = time.perf_counter()
-    try:
-        for df in get_graph(spark, sf_dir):
-            df.count()
-        timings["graph_build"] = round(time.perf_counter() - t0, 4)
-    except Exception as e:  # noqa: BLE001 — one failure must not kill the run
-        errors["graph_build"] = (str(e) or repr(e)).splitlines()[0][:300]
-
-    # same fair-accounting entry for the persistent MinHash store
-    # (postings + signatures shared by the dedup-family gates): its
-    # one-time build must not be silently attributed to whichever
-    # dedup query runs first
-    from xml_to_sqlite3_spark.operators.dedup import get_minhash_store
-
-    t0 = time.perf_counter()
-    try:
-        for df in get_minhash_store(
-            spark, os.path.join(sf_dir, "documents.parquet"), n=3, k=64
-        ):
-            df.count()
-        timings["minhash_store"] = round(time.perf_counter() - t0, 4)
-    except Exception as e:  # noqa: BLE001
-        errors["minhash_store"] = (str(e) or repr(e)).splitlines()[0][:300]
-
-    # and for the persistent near-dup components store (the Jaccard
-    # closure shared by dedup_components / dedup_canonical)
-    from xml_to_sqlite3_spark.operators.dedup import get_components_store
-
-    t0 = time.perf_counter()
-    try:
-        get_components_store(
-            spark, os.path.join(sf_dir, "documents.parquet"), threshold=0.3, n=3
-        ).count()
-        timings["components_store"] = round(time.perf_counter() - t0, 4)
-    except Exception as e:  # noqa: BLE001
-        errors["components_store"] = (str(e) or repr(e)).splitlines()[0][:300]
-
-    def _release_query_state() -> None:
-        # per-query memory isolation: operators persist/checkpoint
-        # intermediates (minhash tokens, signatures, edge blocks)
-        # that stay referenced until GC — measured at sf0.1, the
-        # accumulated storage blocks from the dedup family slowed a
-        # later graph_distances 2.5x (11.5s -> 29.6s) through
-        # storage-memory eviction thrash. Dropping the cache and
-        # nudging the JVM's ContextCleaner between queries restores
-        # every query to a clean-session baseline.
-        try:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — hygiene must never fail the bench
-            pass
-
-    # drop the warm-up's and graph build's leftover blocks so the
-    # FIRST timed query doesn't absorb their eviction pressure (the
-    # same distortion _release_query_state documents mid-loop)
-    _release_query_state()
+    # drop the warm-up's and store builds' leftover blocks so the
+    # FIRST timed query doesn't absorb their eviction pressure
+    release_session_state(spark)
 
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
@@ -173,7 +125,7 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             errors[name] = (str(e) or repr(e)).splitlines()[0][:300]
         df = None  # drop the plan's persisted/checkpointed block refs
-        _release_query_state()
+        release_session_state(spark)
 
     total = round(sum(timings.values()), 2)
     # ASCENDING by time, with the total/metric fields AFTER the

@@ -53,9 +53,7 @@ def main() -> None:
     ap.add_argument("--tag", default="r15")
     args = ap.parse_args()
 
-    from xml_to_sqlite3_spark.operators.dedup import _minhash_cache_root
-    from xml_to_sqlite3_spark.operators.search import _index_cache_root
-    from xml_to_sqlite3_spark.plans.node_graph import _graph_cache_root
+    from xml_to_sqlite3_spark.cache_util import store_root
     from xml_to_sqlite3_spark.session import get_spark
     from xml_to_sqlite3_spark.streaming.ingest import (
         stream_document_maintenance,
@@ -75,7 +73,7 @@ def main() -> None:
     # doc ids must clear the base corpus AND every earlier wave
     id0 = 10_000_000_000
     doc_waves = []
-    mh_root, ix_root = _minhash_cache_root(), _index_cache_root()
+    mh_root, ix_root = store_root("minhash"), store_root("index")
     for w in range(args.doc_waves):
         ids = range(id0 + w * args.docs_per_wave, id0 + (w + 1) * args.docs_per_wave)
         df = spark.createDataFrame(
@@ -116,7 +114,7 @@ def main() -> None:
     g_in = os.path.join(args.work_dir, "xml_incoming")
     g_ckpt = os.path.join(args.work_dir, "graph_ckpt")
     os.makedirs(g_in)
-    g_root = _graph_cache_root()
+    g_root = store_root("graph")
     graph_series = []
     for w in range(args.graph_waves):
         items = "".join(

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from xml_to_sqlite3_spark import cache_util
 from xml_to_sqlite3_spark.operators import dedup as D
 
 BASE = (
@@ -335,8 +336,7 @@ def test_minhash_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     # an earlier test would satisfy this first call WITHOUT building
     # under this test's root, and the attach below would then be a
     # (poisoned) rebuild — clear so the build demonstrably happens here
-    D._MINHASH_STORE_MEMO.clear()
-    D._SIMHASH_STORE_MEMO.clear()
+    cache_util.forget("minhash")
     tokens, sigs = D.get_minhash_store(spark, path, n=3, k=64)
     docs = spark.read.parquet(path)
     # store contents equal a direct computation (pure function of text)
@@ -348,7 +348,7 @@ def test_minhash_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     # attach path: drop the memo; the second call must ATTACH, never
     # rebuild — pin it by poisoning the build's first step (a silent
     # rebuild would raise; attach never shingles)
-    D._MINHASH_STORE_MEMO.clear()
+    cache_util.forget("minhash")
 
     def _boom(*a, **kw):
         raise AssertionError("rebuild attempted — attach contract broken")
@@ -386,7 +386,7 @@ def test_minhash_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     a = D.minhash_lsh_pairs(docs, threshold=0.2)
     b = D.minhash_lsh_pairs(docs, threshold=0.2, tokens=t2, sigs=s2)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    D.clear_minhash_store()
+    cache_util.clear("minhash", "components")
 
 
 def test_shingle_novelty_first_occurrence(spark):
@@ -449,8 +449,7 @@ def test_components_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_MINHASH_CACHE", str(tmp_path / "mh"))
     sf = "/root/testdata/sf0.001"
     path = f"{sf}/documents.parquet"
-    D._MINHASH_STORE_MEMO.clear()
-    D._COMPONENTS_STORE_MEMO.clear()
+    cache_util.forget("minhash", "components")
     store = D.get_components_store(spark, path, threshold=0.3, n=3)
     # store contents equal a direct computation (pure function)
     docs = spark.read.parquet(path)
@@ -462,7 +461,7 @@ def test_components_store_attach_and_equivalence(spark, tmp_path, monkeypatch):
     assert store.exceptAll(direct).count() == 0
     # attach: drop the memo; the second call must ATTACH, never
     # rebuild — poison the build's pair step to prove it
-    D._COMPONENTS_STORE_MEMO.clear()
+    cache_util.forget("components")
 
     def _boom(*a, **kw):
         raise AssertionError("rebuild attempted — attach contract broken")

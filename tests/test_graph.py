@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from xml_to_sqlite3_spark import cache_util
 from xml_to_sqlite3_spark.operators.graph import (
     bfs_distances,
     connected_components,
@@ -93,11 +94,11 @@ def test_graph_cache_content_key_and_pruning(spark, tmp_path, monkeypatch):
     key1 = NG._graph_cache_key(sf_dir)
     n1, p1, x1 = NG.get_graph(spark, sf_dir)
     count1 = x1.count()
-    root = NG._graph_cache_root()
+    root = cache_util.store_root("graph")
     assert os.path.exists(os.path.join(root, key1, "_COMPLETE"))
 
     # fresh-session reuse: same key, no rebuild (dir untouched)
-    NG._GRAPH_CACHE.clear()
+    cache_util.forget("graph")
     mtime_before = os.path.getmtime(os.path.join(root, key1, "_COMPLETE"))
     _, _, x1b = NG.get_graph(spark, sf_dir)
     assert x1b.count() == count1
@@ -113,7 +114,7 @@ def test_graph_cache_content_key_and_pruning(spark, tmp_path, monkeypatch):
     # age the key1 entry past the grace window
     old = os.path.getmtime(os.path.join(root, key1)) - 7200
     os.utime(os.path.join(root, key1), (old, old))
-    NG._GRAPH_CACHE.clear()
+    cache_util.forget("graph")
     _, _, x2 = NG.get_graph(spark, sf_dir)
     assert x2.count() == count1  # same data, same result
     assert os.path.exists(os.path.join(root, key2, "_COMPLETE"))
@@ -124,12 +125,38 @@ def test_graph_cache_content_key_and_pruning(spark, tmp_path, monkeypatch):
     os.utime(victim2, (os.path.getatime(victim2), os.path.getmtime(victim2) + 10))
     key3 = NG._graph_cache_key(sf_dir)
     assert key3 not in (key1, key2)
-    NG._GRAPH_CACHE.clear()
+    cache_util.forget("graph")
     _, _, x3 = NG.get_graph(spark, sf_dir)
     assert x3.count() == count1
     assert os.path.exists(os.path.join(root, key2))  # fresh -> spared
 
-    NG._GRAPH_CACHE.clear()
+    cache_util.forget("graph")
+
+
+def test_clear_drops_every_store_handle(spark, tmp_path, monkeypatch):
+    """One clear drops EVERY handle of the graph store: after clearing
+    a store this session built, a table accessor must rebuild instead
+    of serving a memoized handle to the deleted entry (a per-table
+    memo the clear skipped would make the second count raise
+    file-not-found)."""
+    import os
+
+    from tests.conftest import SF_SMOKE
+    from xml_to_sqlite3_spark.plans import node_graph as NG
+
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_CACHE", str(tmp_path / "cache"))
+    # start from no handles, so the store is built under this root
+    cache_util.clear("graph")
+    NG.get_graph(spark, SF_SMOKE)
+    n_core = NG.get_store_table(spark, SF_SMOKE, "coreness").count()
+    assert n_core > 0
+    entry = cache_util.entry_dir("graph", NG._graph_cache_key(SF_SMOKE))
+    assert os.path.isdir(entry)
+
+    cache_util.clear("graph")
+    assert not os.path.exists(entry)
+    assert NG.get_store_table(spark, SF_SMOKE, "coreness").count() == n_core
+    cache_util.clear("graph")
 
 
 def _naive_pagerank(edges, damping=0.85, n_iter=10):
@@ -410,20 +437,17 @@ def test_kcore_store_table_equals_live_fixpoint(spark):
     the round count) — the graph_kcore gate reads this table."""
     from tests.conftest import SF_SMOKE
     from xml_to_sqlite3_spark.operators.graph import kcore_decomposition
-    from xml_to_sqlite3_spark.plans.node_graph import (
-        get_coreness,
-        get_tri_oriented,
-    )
+    from xml_to_sqlite3_spark.plans.node_graph import get_store_table
 
     stored = {
         r["node_id"]: r["coreness"]
-        for r in get_coreness(spark, SF_SMOKE).collect()
+        for r in get_store_table(spark, SF_SMOKE, "coreness").collect()
     }
     stats: dict = {}
     live = {
         r["node_id"]: r["coreness"]
         for r in kcore_decomposition(
-            None, und=get_tri_oriented(spark, SF_SMOKE), stats=stats
+            None, und=get_store_table(spark, SF_SMOKE, "tri_oriented"), stats=stats
         ).collect()
     }
     assert stored == live and len(stored) > 0

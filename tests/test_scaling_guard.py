@@ -42,6 +42,8 @@ import time
 
 import pytest
 
+from xml_to_sqlite3_spark.session import release_session_state
+
 # scale-ratio sweeps run 8 heavy queries at two SFs — excluded from the inner loop (-m "not heavy")
 pytestmark = pytest.mark.heavy
 
@@ -116,24 +118,14 @@ def _best_of_2(fn) -> float:
     return best
 
 
-def _release_session_state(spark) -> None:
-    """bench.py's _release_query_state, applied before each ratio
-    measurement: drop accumulated cached/checkpointed blocks and nudge
-    the ContextCleaner so a full-suite shared session measures the
-    same clean-session baseline the bench (and a solo run) does. See
-    the module docstring's r16 note for the driver failure this
-    defends against."""
-    try:
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-    except Exception:  # noqa: BLE001 — hygiene must never fail the guard
-        pass
-
-
 @pytest.mark.parametrize("name,bound", RATIO_BOUNDS)
 def test_scaling_ratio(name, bound, warmed, spark):
     qs = warmed
-    _release_session_state(spark)
+    # bench.py's hygiene before each ratio measurement, so a
+    # full-suite shared session measures the same clean-session
+    # baseline the bench (and a solo run) does — see the module
+    # docstring's r16 note for the driver failure this defends against
+    release_session_state(spark)
     t_small = _best_of_2(lambda: qs[name](spark, SF_SMALL).collect())
     t_big = _best_of_2(lambda: qs[name](spark, SF_BIG).collect())
     ratio = t_big / max(t_small, _DENOM_FLOOR)
@@ -167,11 +159,12 @@ def test_kcore_rounds_tripwire(warmed, spark):
     import json
     import os
 
+    from xml_to_sqlite3_spark.cache_util import entry_dir
     from xml_to_sqlite3_spark.plans import node_graph as ng
 
     rounds = {}
     for sf, bound in ((SF_SMALL, 30), (SF_BIG, 45)):
-        store = os.path.join(ng._graph_cache_root(), ng._graph_cache_key(sf))
+        store = entry_dir("graph", ng._graph_cache_key(sf))
         sidecar = os.path.join(store, "kcore_stats.json")
         assert os.path.exists(sidecar), (
             f"{sf}: store published without kcore_stats.json — the build "

@@ -1,10 +1,19 @@
-"""Shared content-keyed on-disk cache machinery.
+"""Shared content-keyed on-disk cache machinery and the store registry.
 
-One implementation of the build-once/attach-many parquet cache both
-the node-graph store (plans/node_graph.get_graph) and the BM25 text
-index (operators/search.get_text_index) publish through — the
-concurrency and pruning subtleties live HERE exactly once:
+The five persistent stores — node graph (plans/node_graph), BM25
+text index (operators/search), MinHash and near-dup components
+(operators/dedup), IVF/PQ codebooks and index (operators/similarity)
+— each own only their key, build function, ``_COMPLETE`` payload and
+on-disk layout. Everything else lives HERE exactly once:
 
+- the store registry, the ONE place store handles live: the cache
+  root of each store kind (``store_root``), the in-session handle
+  memo keyed ``(applicationId, content key)`` (``cached``), the
+  ledger of entry dirs this process published (``publish``), and
+  the one ``clear(kind)`` that drops every handle of a store kind
+  together with the entries it built — a store cannot keep a stale
+  handle to a deleted entry, because there is no second memo to
+  forget.
 - atomic publish: build into a pid-suffixed tmp dir, write the
   ``_COMPLETE`` marker last, then ONE os.rename — concurrent
   builders either win the rename or discard their copy; readers
@@ -24,8 +33,10 @@ import functools
 import hashlib
 import os
 import shutil
+import tempfile
 import time
 from collections.abc import Callable
+from typing import Any
 
 
 @functools.lru_cache(maxsize=None)
@@ -227,3 +238,137 @@ def link_tree(base_dir: str, tmp: str, subdirs: tuple[str, ...], what: str = "st
                     # cross-device cache roots (or a filesystem
                     # without hard links): fall back to a real copy
                     shutil.copy2(s, d)
+
+
+# ---------------------------------------------------------------------------
+# The store registry.
+# ---------------------------------------------------------------------------
+
+# store kind -> the env var naming its cache root; unset, the root is
+# a directory of the same (lowercased) name under the temp dir. The
+# components closure shares the MinHash root: it is built from that
+# store's postings, and the two publish side by side.
+_ROOT_ENV = {
+    "graph": "SPARK_GRAFT_GRAPH_CACHE",
+    "index": "SPARK_GRAFT_INDEX_CACHE",
+    "minhash": "SPARK_GRAFT_MINHASH_CACHE",
+    "codebook": "SPARK_GRAFT_CODEBOOK_CACHE",
+}
+_ROOT_ENV["components"] = _ROOT_ENV["minhash"]
+
+# (kind, applicationId, content key) -> the attached handles.
+# applicationId, not id(sparkContext): CPython reuses object
+# addresses after GC, so an id()-keyed hit could hand back
+# DataFrames bound to a STOPPED session.
+_HANDLES: dict[tuple[str, str, str], Any] = {}
+
+# kind -> entry dirs THIS process published (what clear() may delete)
+_BUILT: dict[str, list[str]] = {kind: [] for kind in _ROOT_ENV}
+
+
+def store_root(kind: str) -> str:
+    """The cache root of store ``kind`` — read from the environment on
+    every call, so a test (or a benchmark run) can point a store at a
+    private root by setting the env var."""
+    env = _ROOT_ENV[kind]
+    return os.environ.get(env, os.path.join(tempfile.gettempdir(), env.lower()))
+
+
+def entry_dir(kind: str, key: str) -> str:
+    """Where the entry ``key`` of store ``kind`` is (or would be)
+    published."""
+    return os.path.join(store_root(kind), key)
+
+
+def is_published(kind: str, key: str) -> bool:
+    return os.path.exists(os.path.join(entry_dir(kind, key), "_COMPLETE"))
+
+
+def publish(kind: str, key: str, build: Callable[[str], None]) -> str:
+    """``content_cached_dir`` under the kind's root, recording the
+    entry in the kind's ledger when this process built it."""
+    return content_cached_dir(store_root(kind), key, build, owned_dirs=_BUILT[kind])
+
+
+def cached(
+    kind: str,
+    spark,
+    key: str,
+    build: Callable[[str], None],
+    attach: Callable[[str], Any],
+) -> Any:
+    """The session's handles for entry ``key``: a memo hit, or
+    ``attach(publish(...))`` — the published dir is built first when
+    absent — memoized until ``clear``/``forget`` drops the kind."""
+    mk = (kind, spark.sparkContext.applicationId, key)
+    if mk not in _HANDLES:
+        _HANDLES[mk] = attach(publish(kind, key, build))
+    return _HANDLES[mk]
+
+
+def read_tables(spark, final: str, subdirs, refresh=None) -> dict:
+    """{sub: DataFrame} for parquet tables of a published entry. A
+    clear+rebuild lands NEW part files at the SAME path, so Spark's
+    file-status cache for each path is dropped first — a stale
+    listing would point reads at deleted files (FAILED_READ_FILE).
+    ``refresh`` widens that to every table of the entry when only
+    some are read here (an append's guards open the others straight
+    from the dir)."""
+    for sub in refresh or subdirs:
+        spark.catalog.refreshByPath(f"{final}/{sub}")
+    return {sub: spark.read.parquet(f"{final}/{sub}") for sub in subdirs}
+
+
+def forget(*kinds: str) -> None:
+    """Drop the in-session handles of ``kinds`` (every kind when none
+    is named) WITHOUT touching disk — the next access cold-attaches,
+    exactly as a fresh session would."""
+    for mk in [mk for mk in _HANDLES if not kinds or mk[0] in kinds]:
+        del _HANDLES[mk]
+
+
+def clear(*kinds: str) -> None:
+    """Drop every handle of ``kinds`` (every kind when none is named)
+    AND the on-disk entries THIS process built for them under the
+    kind's current root (tests use this to force a rebuild; a test
+    that points a store at a private root clears only that root, not
+    the shared entries earlier tests built). Attached-only entries
+    are left alone: they are other sessions' shared property, and
+    deleting them would bypass the pruning path's grace window."""
+    forget(*kinds)
+    for kind in kinds or tuple(_BUILT):
+        root = os.path.normpath(store_root(kind))
+        built = _BUILT[kind]
+        for final in [d for d in built if os.path.dirname(d) == root]:
+            built.remove(final)
+            shutil.rmtree(final, ignore_errors=True)
+
+
+def warm_gate_stores(spark, sf_dir: str) -> dict[str, float | Exception]:
+    """Build or attach the three stores the gate set shares (node
+    graph, MinHash, components) and evaluate every handle, returning
+    {bench entry: seconds, or the exception that stopped it}. Harnesses
+    call this once before any timed query so no gate row absorbs a
+    one-time build — the reference's model is build the database
+    once, query it many times."""
+    from .operators.dedup import get_components_store, get_minhash_store
+    from .plans.node_graph import get_graph
+
+    docs = os.path.join(sf_dir, "documents.parquet")
+    steps = {
+        "graph_build": lambda: get_graph(spark, sf_dir),
+        "minhash_store": lambda: get_minhash_store(spark, docs, n=3, k=64),
+        "components_store": lambda: (
+            get_components_store(spark, docs, threshold=0.3, n=3),
+        ),
+    }
+    out: dict[str, float | Exception] = {}
+    for name, frames in steps.items():
+        t0 = time.perf_counter()
+        try:
+            for df in frames():
+                df.count()
+            out[name] = time.perf_counter() - t0
+        except Exception as e:  # noqa: BLE001 — one failure must not stop the rest
+            out[name] = e
+    return out

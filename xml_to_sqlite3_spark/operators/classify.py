@@ -28,53 +28,9 @@ either broadcasts or falls back to a shuffle equi-join on token.
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-
-
-def _token_counts_udf():
-    """Vectorized per-document multinomial counts:
-    array<struct<token, cnt>> per text, byte-identical tokens to
-    search.tokenize (collapse JVM-\\s+ → trim spaces → lower → split
-    → drop empties; the shingles_udf ASCII-whitespace discipline).
-
-    The r14 UDF boundary rule says UDF-ify a HOF only when the batch
-    REDUCES inside the UDF — it does here: duplicate tokens collapse
-    to (token, cnt) pairs IN the row, which is what lets the callers
-    drop the corpus-wide groupBy(id, token) shuffle entirely (the
-    per-document aggregation never needed to leave the document).
-
-    r16: kept only as the A/B twin of the native occurrence path
-    below (SPARK_GRAFT_NB_ARROW=1 re-enables it for measurement);
-    see _token_occurrences for why native won."""
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    @F.pandas_udf("array<struct<token: string, cnt: long>>")
-    def counts(texts: pd.Series) -> pd.Series:
-        from collections import Counter
-
-        out = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            words = ws.sub(" ", t).strip(" ").lower().split(" ")
-            c = Counter(words)
-            c.pop("", None)
-            out.append(list(c.items()))
-        return pd.Series(out)
-
-    return counts
-
-
-def _use_arrow_tokens() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_NB_ARROW") == "1"
 
 
 def _token_occurrences(
@@ -83,7 +39,7 @@ def _token_occurrences(
     """One row per token OCCURRENCE: (``id_col``, *extra, token) —
     the fully native tokenizing projection (search.tokenize: collapse
     \\s+ → trim → lower → split → drop empties; explode drops
-    null-text docs exactly like the Arrow twin's empty array).
+    null-text docs).
 
     r16 (VERDICT r15 item 5): every NB consumer of the old per-row
     (token, cnt) pairs immediately AGGREGATES on keys coarser than
@@ -107,22 +63,6 @@ def _token_occurrences(
             )
         ).alias("token"),
     )
-
-
-def _token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, token, cnt) — multinomial counts per document. A/B twin
-    retained for tests that exercise the per-document counting shape
-    directly (the gates consume _token_occurrences)."""
-    if not _use_arrow_tokens():
-        return (
-            _token_occurrences(df, id_col, text_col)
-            .groupBy(id_col, "token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-    return df.select(
-        F.col(id_col),
-        F.explode(_token_counts_udf()(F.col(text_col))).alias("tc"),
-    ).select(id_col, F.col("tc.token").alias("token"), F.col("tc.cnt").alias("cnt"))
 
 
 def nb_train(
@@ -149,25 +89,12 @@ def nb_train(
     # per-document Arrow pre-count saved nothing it wasn't already
     # saving while costing the Python boundary; sum(cnt) over
     # per-doc counts == count(*) over occurrences (exact integers).
-    if _use_arrow_tokens():
-        per_class = train.select(
-            F.col(label_col).alias("label"),
-            F.explode(_token_counts_udf()(F.col(text_col))).alias("tc"),
-        ).select(
-            "label", F.col("tc.token").alias("token"), F.col("tc.cnt").alias("cnt")
-        )
-        model_tf = per_class.groupBy("token", "label").agg(
-            F.sum("cnt").alias("tf")
-        )
-    else:
-        occ = _token_occurrences(
-            train.select(F.col(label_col).alias("label"), F.col(text_col)),
-            "label",
-            text_col,
-        )
-        model_tf = occ.groupBy("token", "label").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
+    occ = _token_occurrences(
+        train.select(F.col(label_col).alias("label"), F.col(text_col)),
+        "label",
+        text_col,
+    )
+    model_tf = occ.groupBy("token", "label").agg(F.count(F.lit(1)).alias("tf"))
     model = model_tf.select(
         "token",
         "label",
@@ -226,26 +153,14 @@ def _nb_scored_grid(
     # order, absorbed by the 6dp score rounding exactly like Spark's
     # own partition-order nondeterminism (oracle-verified at both
     # test SFs).
-    if _use_arrow_tokens():
-        toks = _token_counts(test, id_col, text_col)
-        iv = toks.join(F.broadcast(fitted["vocab"]), "token")
-        n_iv = iv.groupBy(id_col).agg(F.sum("cnt").cast("double").alias("niv"))
-        adj_sums = (
-            iv.join(F.broadcast(fitted["model"]), "token")
-            .groupBy(id_col, "label")
-            .agg(F.sum(F.col("cnt") * F.col("adj_ln")).alias("adj_sum"))
-        )
-    else:
-        occ = _token_occurrences(test, id_col, text_col)
-        iv = occ.join(F.broadcast(fitted["vocab"]), "token")
-        n_iv = iv.groupBy(id_col).agg(
-            F.count(F.lit(1)).cast("double").alias("niv")
-        )
-        adj_sums = (
-            iv.join(F.broadcast(fitted["model"]), "token")
-            .groupBy(id_col, "label")
-            .agg(F.sum("adj_ln").alias("adj_sum"))
-        )
+    occ = _token_occurrences(test, id_col, text_col)
+    iv = occ.join(F.broadcast(fitted["vocab"]), "token")
+    n_iv = iv.groupBy(id_col).agg(F.count(F.lit(1)).cast("double").alias("niv"))
+    adj_sums = (
+        iv.join(F.broadcast(fitted["model"]), "token")
+        .groupBy(id_col, "label")
+        .agg(F.sum("adj_ln").alias("adj_sum"))
+    )
     grid = test.select(F.col(id_col)).crossJoin(F.broadcast(fitted["class_stats"]))
     return (
         grid.join(n_iv, id_col, "left")

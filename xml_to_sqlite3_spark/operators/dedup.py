@@ -995,31 +995,11 @@ def remove_duplicated_spans(
     )
 
 
-_MINHASH_STORE_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_SIMHASH_STORE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_WINDOW_STORE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_MINHASH_STORE_DIRS: list[str] = []
-
 # every parquet table a published dedup-store entry holds; ALL are
 # per-document rows (pure functions of each document alone), so the
 # append path hard-links the whole list and lands delta files
 # alongside — no merge-rewrites at all, unlike the graph store
 _DEDUP_STORE_SUBDIRS = ("tokens", "sigs", "simhash", "win8", "doc_ids")
-
-
-def _minhash_cache_root() -> str:
-    """THE dedup/components cache root — one definition (the
-    _index_cache_root/_graph_cache_root precedent) shared by the
-    store builders, both append paths, and the maintenance-stream
-    attach accessor, so an env-var or default-path change can never
-    strand a reader away from the entries the writers publish."""
-    import os
-    import tempfile
-
-    return os.environ.get(
-        "SPARK_GRAFT_MINHASH_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_minhash_cache"),
-    )
 
 
 def _minhash_store_key(
@@ -1096,17 +1076,37 @@ def get_minhash_store(
     functions of (text, n, k, fixed perm seeds), so attached ==
     recomputed exactly; per-doc rows mean any subset of documents
     can be served by a semi-join filter on the store."""
-    import os
-    import tempfile
+    h = _dedup_handles(spark, doc_path, n, k, id_col, text_col)
+    return h["tokens"], h["sigs"]
 
-    from ..cache_util import content_cached_dir, content_key
+
+def _attach_dedup(
+    spark, final: str, subdirs, n: int, k: int, doc_path: str
+) -> dict:
+    """Read ``subdirs`` of a published dedup-store entry, tagging the
+    frames consumers validate: tokens/sigs carry the (n, k) they were
+    built with — a store built under other parameters yields silently
+    wrong pairs (see _check_store_meta) — and win8 its window width."""
+    from ..cache_util import read_tables
+
+    out = read_tables(spark, final, subdirs, refresh=_DEDUP_STORE_SUBDIRS)
+    meta = {"n": n, "k": k, "src": doc_path}
+    for sub in ("tokens", "sigs"):
+        if sub in out:
+            out[sub]._mh_meta = meta  # type: ignore[attr-defined]
+    if "win8" in out:
+        out["win8"]._win_n = 8  # type: ignore[attr-defined]
+    return out
+
+
+def _dedup_handles(
+    spark, doc_path: str, n: int, k: int, id_col: str, text_col: str
+) -> dict:
+    """{tokens, sigs, simhash, win8} of the dedup-store entry for
+    (doc_path, n, k, columns), built first when absent."""
+    from ..cache_util import cached
 
     ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    memo = _MINHASH_STORE_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    root = _minhash_cache_root()
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(doc_path)
@@ -1141,24 +1141,15 @@ def get_minhash_store(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_MINHASH_STORE_DIRS)
-    for sub in _DEDUP_STORE_SUBDIRS:
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-    tokens = spark.read.parquet(f"{final}/tokens")
-    sigs = spark.read.parquet(f"{final}/sigs")
-    # consumers validate these against their own (n, k) arguments —
-    # a store built under other parameters yields silently wrong
-    # pairs (see _check_store_meta)
-    meta = {"n": n, "k": k, "src": doc_path}
-    tokens._mh_meta = meta  # type: ignore[attr-defined]
-    sigs._mh_meta = meta  # type: ignore[attr-defined]
-    out = (tokens, sigs)
-    _MINHASH_STORE_MEMO[memo_key] = out
-    _SIMHASH_STORE_MEMO[memo_key] = spark.read.parquet(f"{final}/simhash")
-    win8 = spark.read.parquet(f"{final}/win8")
-    win8._win_n = 8  # type: ignore[attr-defined] — consumers validate
-    _WINDOW_STORE_MEMO[memo_key] = win8
-    return out
+    return cached(
+        "minhash",
+        spark,
+        ck,
+        _build,
+        lambda final: _attach_dedup(
+            spark, final, ("tokens", "sigs", "simhash", "win8"), n, k, doc_path
+        ),
+    )
 
 
 def get_simhash_store(
@@ -1172,15 +1163,7 @@ def get_simhash_store(
     """(doc_id, simhash) from the shared dedup store (built by the
     same get_minhash_store entry — n/k participate in the key because
     the entry is one artifact)."""
-    from ..cache_util import content_key
-
-    ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    if memo_key not in _SIMHASH_STORE_MEMO:
-        get_minhash_store(
-            spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
-        )
-    return _SIMHASH_STORE_MEMO[memo_key]
+    return _dedup_handles(spark, doc_path, n, k, id_col, text_col)["simhash"]
 
 
 def get_window_store(
@@ -1195,19 +1178,7 @@ def get_window_store(
     dedup store (built by the same get_minhash_store entry; the
     window width is fixed at the decontamination family's n=8 — the
     n/k here are the STORE key's MinHash parameters)."""
-    from ..cache_util import content_key
-
-    ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    if memo_key not in _WINDOW_STORE_MEMO:
-        get_minhash_store(
-            spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
-        )
-    return _WINDOW_STORE_MEMO[memo_key]
-
-
-_COMPONENTS_STORE_MEMO: dict[tuple[str, str], DataFrame] = {}
-_COMPONENTS_STORE_DIRS: list[str] = []
+    return _dedup_handles(spark, doc_path, n, k, id_col, text_col)["win8"]
 
 
 def get_components_store(
@@ -1232,18 +1203,10 @@ def get_components_store(
     from the minhash store's postings (no re-shingling); keyed on
     this module AND operators/graph.py (connected_components is the
     other half of the build code)."""
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir
+    from ..cache_util import cached, read_tables
     from .graph import duplicate_groups
 
     ck = _components_store_key(doc_path, threshold, n, k, id_col, text_col)
-    memo_key = (spark.sparkContext.applicationId, ck)
-    memo = _COMPONENTS_STORE_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
-    root = _minhash_cache_root()
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(doc_path)
@@ -1260,11 +1223,13 @@ def get_components_store(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_COMPONENTS_STORE_DIRS)
-    spark.catalog.refreshByPath(f"{final}/components")
-    out = spark.read.parquet(f"{final}/components")
-    _COMPONENTS_STORE_MEMO[memo_key] = out
-    return out
+    return cached(
+        "components",
+        spark,
+        ck,
+        _build,
+        lambda final: read_tables(spark, final, ("components",))["components"],
+    )
 
 
 def _dedup_append_guard(spark, base_dir: str, dd: DataFrame, id_col: str) -> None:
@@ -1343,17 +1308,13 @@ def append_dedup_documents(
     appended entries are a pipeline capability with their own
     identity.
     """
-    import os
-    import tempfile
+    from ..cache_util import entry_dir, is_published, link_tree, publish
 
-    from ..cache_util import content_cached_dir, content_key, link_tree
-
-    root = _minhash_cache_root()
     if base_append:
         base_ck = _minhash_store_key(
             doc_path, n, k, id_col, text_col, append=base_append
         )
-        if not os.path.exists(os.path.join(root, base_ck, "_COMPLETE")):
+        if not is_published("minhash", base_ck):
             raise ValueError(
                 f"append_dedup_documents: chained base entry "
                 f"(append chain {base_append!r}) is not published — "
@@ -1366,7 +1327,7 @@ def append_dedup_documents(
         )
         base_ck = _minhash_store_key(doc_path, n, k, id_col, text_col)
         chain = delta_key
-    base_dir = os.path.join(root, base_ck)
+    base_dir = entry_dir("minhash", base_ck)
     ck = _minhash_store_key(doc_path, n, k, id_col, text_col, append=chain)
 
     def _build(tmp: str) -> None:
@@ -1408,18 +1369,12 @@ def append_dedup_documents(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_MINHASH_STORE_DIRS)
-    out: dict = {"path": final, "append_key": chain}
-    meta = {"n": n, "k": k, "src": doc_path}
-    for sub in _DEDUP_STORE_SUBDIRS:
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-        frame = spark.read.parquet(f"{final}/{sub}")
-        if sub in ("tokens", "sigs"):
-            frame._mh_meta = meta  # type: ignore[attr-defined]
-        if sub == "win8":
-            frame._win_n = 8  # type: ignore[attr-defined]
-        out[sub] = frame
-    return out
+    final = publish("minhash", ck, _build)
+    return {
+        "path": final,
+        "append_key": chain,
+        **_attach_dedup(spark, final, _DEDUP_STORE_SUBDIRS, n, k, doc_path),
+    }
 
 
 def _incremental_jaccard_pairs(
@@ -1550,18 +1505,14 @@ def append_components(
     of publishing a parallel one. Returns {"path": dir, "append_key":
     chain, "components": DataFrame}.
     """
-    import os
-    import tempfile
-
-    from ..cache_util import content_cached_dir
+    from ..cache_util import entry_dir, is_published, publish, read_tables
     from .graph import connected_components
 
-    root = _minhash_cache_root()
     if base_append:
         base_ck = _components_store_key(
             doc_path, threshold, n, k, id_col, text_col, append=base_append
         )
-        if not os.path.exists(os.path.join(root, base_ck, "_COMPLETE")):
+        if not is_published("components", base_ck):
             raise ValueError(
                 f"append_components: chained base entry (append chain "
                 f"{base_append!r}) is not published — appends must stack "
@@ -1577,7 +1528,7 @@ def append_components(
             doc_path, threshold, n, k, id_col, text_col
         )
         chain = delta_key
-    base_dir = os.path.join(root, base_ck)
+    base_dir = entry_dir("components", base_ck)
     ck = _components_store_key(
         doc_path, threshold, n, k, id_col, text_col, append=chain
     )
@@ -1597,10 +1548,9 @@ def append_components(
             pre_ck = _minhash_store_key(
                 doc_path, n, k, id_col, text_col, append=base_append
             )
-            spark.catalog.refreshByPath(os.path.join(root, pre_ck, "tokens"))
-            base_tokens = spark.read.parquet(
-                os.path.join(root, pre_ck, "tokens")
-            )
+            base_tokens = read_tables(
+                spark, entry_dir("minhash", pre_ck), ("tokens",)
+            )["tokens"]
         else:
             base_tokens, _ = get_minhash_store(
                 spark, doc_path, n=n, k=k, id_col=id_col, text_col=text_col
@@ -1668,12 +1618,11 @@ def append_components(
         with open(f"{tmp}/_COMPLETE", "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_COMPONENTS_STORE_DIRS)
-    spark.catalog.refreshByPath(f"{final}/components")
+    final = publish("components", ck, _build)
     return {
         "path": final,
         "append_key": chain,
-        "components": spark.read.parquet(f"{final}/components"),
+        **read_tables(spark, final, ("components",)),
     }
 
 
@@ -2039,21 +1988,6 @@ def fuzzy_match(
         max_block=max_block,
         block_keys=block_keys,
     )
-
-
-def clear_minhash_store() -> None:
-    """Drop in-session handles AND on-disk entries THIS session built
-    (tests); attached-only entries are other sessions' property."""
-    import shutil
-
-    _MINHASH_STORE_MEMO.clear()
-    _SIMHASH_STORE_MEMO.clear()
-    _WINDOW_STORE_MEMO.clear()
-    _COMPONENTS_STORE_MEMO.clear()
-    while _MINHASH_STORE_DIRS:
-        shutil.rmtree(_MINHASH_STORE_DIRS.pop(), ignore_errors=True)
-    while _COMPONENTS_STORE_DIRS:
-        shutil.rmtree(_COMPONENTS_STORE_DIRS.pop(), ignore_errors=True)
 
 
 def shingle_novelty(

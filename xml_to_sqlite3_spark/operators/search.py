@@ -68,24 +68,11 @@ def build_text_index(
 # query-many artifact (the reference roadmap's FTS5 is a *persistent*
 # index), but localCheckpoint blocks die with the session — every new
 # session was paying the ~3s explode+groupBy rebuild. The publish /
-# prune / race machinery is the SHARED cache_util implementation
-# (one copy of the subtle logic, also used by node_graph.get_graph);
-# this module owns only the index-specific parts: what to build and
-# the _COMPLETE marker's corpus-stats payload.
+# prune / race machinery and the session handles are the SHARED
+# cache_util store registry (one copy of the subtle logic for every
+# store); this module owns only the index-specific parts: what to
+# build and the _COMPLETE marker's corpus-stats payload.
 # ---------------------------------------------------------------------------
-
-_INDEX_CACHE: dict = {}
-_INDEX_CACHE_DIRS: list = []
-
-
-def _index_cache_root() -> str:
-    import os
-    import tempfile
-
-    return os.environ.get(
-        "SPARK_GRAFT_INDEX_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_index_cache"),
-    )
 
 
 def _index_key(
@@ -128,14 +115,10 @@ def get_text_index(
     can never return a stale or wrong index.
     """
     import json
-    import os
 
-    from ..cache_util import content_cached_dir
+    from ..cache_util import cached
 
     ck = _index_key(src_path, id_col, text_col)
-    key = (spark.sparkContext.applicationId, ck)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
 
     def _build(tmp: str) -> None:
         docs = spark.read.parquet(src_path)
@@ -182,18 +165,23 @@ def get_text_index(
                 f,
             )
 
-    final = content_cached_dir(
-        _index_cache_root(), ck, _build, owned_dirs=_INDEX_CACHE_DIRS
+    return cached(
+        "index", spark, ck, _build, lambda final: _attach_index(spark, final)[:3]
     )
+
+
+def _attach_index(spark, final: str) -> tuple[DataFrame, int, float, str]:
+    """(index, n_docs, avgdl, path) of a published entry — corpus
+    stats come from the _COMPLETE marker, so attaching runs no job."""
+    import json
+    import os
+
+    from ..cache_util import read_tables
+
     with open(os.path.join(final, "_COMPLETE")) as f:
         meta = json.load(f)
-    # a clear+rebuild lands NEW part files at the SAME path — drop
-    # Spark's file-status cache for it or a stale listing would point
-    # reads at deleted files (FAILED_READ_FILE)
-    spark.catalog.refreshByPath(f"{final}/index")
-    index = spark.read.parquet(f"{final}/index")
-    _INDEX_CACHE[key] = (index, int(meta["n_docs"]), float(meta["avgdl"]))
-    return _INDEX_CACHE[key]
+    index = read_tables(spark, final, ("index",))["index"]
+    return index, int(meta["n_docs"]), float(meta["avgdl"]), final
 
 
 def append_text_index(
@@ -230,12 +218,11 @@ def append_text_index(
     import json
     import os
 
-    from ..cache_util import content_cached_dir, link_tree
+    from ..cache_util import cached, entry_dir, is_published, link_tree
 
     if base_append:
         base_ck = _index_key(src_path, id_col, text_col, append=base_append)
-        base_dir = os.path.join(_index_cache_root(), base_ck)
-        if not os.path.exists(os.path.join(base_dir, "_COMPLETE")):
+        if not is_published("index", base_ck):
             raise ValueError(
                 f"append_text_index: chained base entry (append chain "
                 f"{base_append!r}) is not published — appends must stack "
@@ -245,12 +232,9 @@ def append_text_index(
     else:
         get_text_index(spark, src_path, id_col=id_col, text_col=text_col)
         base_ck = _index_key(src_path, id_col, text_col)
-        base_dir = os.path.join(_index_cache_root(), base_ck)
         chain = delta_key
+    base_dir = entry_dir("index", base_ck)
     ck = _index_key(src_path, id_col, text_col, append=chain)
-    key = (spark.sparkContext.applicationId, ck)
-    if key in _INDEX_CACHE:
-        return _INDEX_CACHE[key]
 
     def _build(tmp: str) -> None:
         import shutil as _sh
@@ -335,26 +319,7 @@ def append_text_index(
                 f,
             )
 
-    final = content_cached_dir(
-        _index_cache_root(), ck, _build, owned_dirs=_INDEX_CACHE_DIRS
-    )
-    with open(os.path.join(final, "_COMPLETE")) as f:
-        meta = json.load(f)
-    spark.catalog.refreshByPath(f"{final}/index")
-    index = spark.read.parquet(f"{final}/index")
-    out = (index, int(meta["n_docs"]), float(meta["avgdl"]), final)
-    _INDEX_CACHE[key] = out
-    return out
-
-
-def clear_index_cache() -> None:
-    """Drop in-session handles AND on-disk entries THIS session built
-    (tests use this to force a rebuild)."""
-    import shutil
-
-    _INDEX_CACHE.clear()
-    while _INDEX_CACHE_DIRS:
-        shutil.rmtree(_INDEX_CACHE_DIRS.pop(), ignore_errors=True)
+    return cached("index", spark, ck, _build, lambda final: _attach_index(spark, final))
 
 
 def corpus_stats(index: DataFrame) -> tuple[int, float]:

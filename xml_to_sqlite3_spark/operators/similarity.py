@@ -696,10 +696,6 @@ def random_sign_projection(
     ).select(id_col, F.col("__p.dim").alias("dim"), F.col("__p.component").alias("component"))
 
 
-_CODEBOOK_MEMO: dict[str, np.ndarray] = {}
-_CODEBOOK_DIRS: list[str] = []
-
-
 def pq_train(
     df: DataFrame,
     m: int = 8,
@@ -1206,17 +1202,12 @@ def get_ivf_pq_index(
     vector index at 100 TB: raw vectors stay in the source table,
     the serving index is m ints + a partition key per vector."""
     import os
-    import tempfile
 
-    from ..cache_util import content_cached_dir
+    from ..cache_util import cached, read_tables
 
     key = _ivfpq_key(
         src_path, n_centroids, m, ks, n_iter, id_col, vec_col,
         residual=residual, rotate=rotate,
-    )
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
     )
 
     def _build(tmp: str) -> None:
@@ -1249,9 +1240,13 @@ def get_ivf_pq_index(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    spark.catalog.refreshByPath(f"{final}/index")
-    return spark.read.parquet(f"{final}/index")
+    return cached(
+        "codebook",
+        spark,
+        key,
+        _build,
+        lambda final: read_tables(spark, final, ("index",))["index"],
+    )
 
 
 def _ivfpq_key(
@@ -1325,9 +1320,8 @@ def get_residual_pq_codebooks(
     embeds n_centroids because the residuals depend on the coarse
     model."""
     import os
-    import tempfile
 
-    from ..cache_util import content_cached_dir, content_key
+    from ..cache_util import cached, content_key
 
     key = content_key(
         "pqcbres",
@@ -1336,13 +1330,6 @@ def get_residual_pq_codebooks(
         + ("_opq" if rotate else ""),
         code_files=(__file__,),
         suffixes=(".parquet",),
-    )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
     )
 
     def _build(tmp: str) -> None:
@@ -1379,10 +1366,13 @@ def get_residual_pq_codebooks(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    books = np.load(os.path.join(final, "pq_codebooks.npy"))
-    _CODEBOOK_MEMO[key] = books
-    return books
+    return cached(
+        "codebook",
+        spark,
+        key,
+        _build,
+        lambda final: np.load(os.path.join(final, "pq_codebooks.npy")),
+    )
 
 
 def append_ivf_pq_index(
@@ -1416,21 +1406,16 @@ def append_ivf_pq_index(
     append_dedup_documents contract). Returns {"path", "append_key",
     "index"}."""
     import os
-    import tempfile
 
-    from ..cache_util import content_cached_dir, link_tree
+    from ..cache_util import entry_dir, is_published, link_tree, publish, read_tables
 
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
     params = dict(
         n_centroids=n_centroids, m=m, ks=ks, n_iter=n_iter,
         id_col=id_col, vec_col=vec_col, residual=residual, rotate=rotate,
     )
     if base_append:
         base_ck = _ivfpq_key(src_path, append=base_append, **params)
-        if not os.path.exists(os.path.join(root, base_ck, "_COMPLETE")):
+        if not is_published("codebook", base_ck):
             raise ValueError(
                 f"append_ivf_pq_index: chained base entry (append chain "
                 f"{base_append!r}) is not published — appends must stack "
@@ -1441,7 +1426,7 @@ def append_ivf_pq_index(
         get_ivf_pq_index(spark, src_path, **params)
         base_ck = _ivfpq_key(src_path, **params)
         chain = delta_key
-    base_dir = os.path.join(root, base_ck)
+    base_dir = entry_dir("codebook", base_ck)
     ck = _ivfpq_key(src_path, append=chain, **params)
 
     def _build(tmp: str) -> None:
@@ -1507,13 +1492,8 @@ def append_ivf_pq_index(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(ck)
 
-    final = content_cached_dir(root, ck, _build, owned_dirs=_CODEBOOK_DIRS)
-    spark.catalog.refreshByPath(f"{final}/index")
-    return {
-        "path": final,
-        "append_key": chain,
-        "index": spark.read.parquet(f"{final}/index"),
-    }
+    final = publish("codebook", ck, _build)
+    return {"path": final, "append_key": chain, **read_tables(spark, final, ("index",))}
 
 
 def _embedding_covariance_fast(df: DataFrame, vec_col: str) -> DataFrame:
@@ -1775,9 +1755,8 @@ def get_codebook(
     function of that input alone, never of a caller-supplied frame
     that might not match it."""
     import os
-    import tempfile
 
-    from ..cache_util import content_cached_dir, content_key
+    from ..cache_util import cached, content_key
 
     key = content_key(
         "cb",
@@ -1785,13 +1764,6 @@ def get_codebook(
         extra=f"k{k}_i{n_iter}_{id_col}_{vec_col}",
         code_files=(__file__,),
         suffixes=(".parquet",),
-    )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
     )
 
     def _build(tmp: str) -> None:
@@ -1807,10 +1779,13 @@ def get_codebook(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    cents = np.load(os.path.join(final, "codebook.npy"))
-    _CODEBOOK_MEMO[key] = cents
-    return cents
+    return cached(
+        "codebook",
+        spark,
+        key,
+        _build,
+        lambda final: np.load(os.path.join(final, "codebook.npy")),
+    )
 
 
 def get_opq_rotation(
@@ -1829,9 +1804,8 @@ def get_opq_rotation(
     matrix is a model parameter like the k-means codebooks: .npy in
     the shared codebook cache root."""
     import os
-    import tempfile
 
-    from ..cache_util import content_cached_dir, content_key
+    from ..cache_util import cached, content_key
 
     key = content_key(
         "opqrot",
@@ -1839,13 +1813,6 @@ def get_opq_rotation(
         extra=f"m{m}_{id_col}_{vec_col}",
         code_files=(__file__,),
         suffixes=(".parquet",),
-    )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
     )
 
     def _build(tmp: str) -> None:
@@ -1863,10 +1830,13 @@ def get_opq_rotation(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    R = np.load(os.path.join(final, "opq_rotation.npy"))
-    _CODEBOOK_MEMO[key] = R
-    return R
+    return cached(
+        "codebook",
+        spark,
+        key,
+        _build,
+        lambda final: np.load(os.path.join(final, "opq_rotation.npy")),
+    )
 
 
 def get_pq_codebooks(
@@ -1887,9 +1857,8 @@ def get_pq_codebooks(
     :func:`get_opq_rotation`; flag in the content key — rotated and
     raw books are different artifacts)."""
     import os
-    import tempfile
 
-    from ..cache_util import content_cached_dir, content_key
+    from ..cache_util import cached, content_key
 
     key = content_key(
         "pqcb",
@@ -1898,13 +1867,6 @@ def get_pq_codebooks(
         + ("_opq" if rotate else ""),
         code_files=(__file__,),
         suffixes=(".parquet",),
-    )
-    memo = _CODEBOOK_MEMO.get(key)
-    if memo is not None:
-        return memo
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
     )
 
     def _build(tmp: str) -> None:
@@ -1938,17 +1900,10 @@ def get_pq_codebooks(
         with open(os.path.join(tmp, "_COMPLETE"), "w") as f:
             f.write(key)
 
-    final = content_cached_dir(root, key, _build, owned_dirs=_CODEBOOK_DIRS)
-    books = np.load(os.path.join(final, "pq_codebooks.npy"))
-    _CODEBOOK_MEMO[key] = books
-    return books
-
-
-def clear_codebook_cache() -> None:
-    """Drop in-session memos AND on-disk entries THIS session built
-    (tests); attached-only entries are other sessions' property."""
-    import shutil
-
-    _CODEBOOK_MEMO.clear()
-    while _CODEBOOK_DIRS:
-        shutil.rmtree(_CODEBOOK_DIRS.pop(), ignore_errors=True)
+    return cached(
+        "codebook",
+        spark,
+        key,
+        _build,
+        lambda final: np.load(os.path.join(final, "pq_codebooks.npy")),
+    )

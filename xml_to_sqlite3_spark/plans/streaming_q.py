@@ -61,15 +61,9 @@ def _run_to_table(result: DataFrame, prefix: str, mode: str = "complete") -> Dat
     # against every streaming oracle). Scoped exactly like the
     # partition count: a streaming query clones its session at
     # start, so the restored conf cannot affect the running query.
-    import os
-
     scoped = {
         "spark.sql.shuffle.partitions": str(n_part),
-        "spark.sql.streaming.noDataMicroBatches.enabled": (
-            # A/B escape used by the r16 measurements (1 = old
-            # behavior, i.e. run the zero-input batches)
-            "true" if os.environ.get("SPARK_GRAFT_STREAM_NODATA") == "1" else "false"
-        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
     }
     saved: dict[str, str | None] = {}
     for key, val in scoped.items():

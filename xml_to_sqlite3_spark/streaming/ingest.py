@@ -574,13 +574,12 @@ def stream_document_maintenance(
         _save_state(state)
         # chain-entry GC: superseded (non-head, past-retention) chain
         # entries for each artifact family (see _prune_chain_tail)
+        from ..cache_util import store_root
         from ..operators.dedup import _components_store_key, _minhash_store_key
-        from ..operators.dedup import _minhash_cache_root as _mh_root
         from ..operators.search import _index_key
-        from ..operators.search import _index_cache_root as _ix_root
 
         _prune_chain_tail(
-            _mh_root(),
+            store_root("minhash"),
             state["dedup_chain"],
             lambda ch: _minhash_store_key(
                 base_doc_path, n, k, id_col, text_col, append=ch
@@ -589,7 +588,7 @@ def stream_document_maintenance(
             grace_sec=chain_prune_grace_sec,
         )
         _prune_chain_tail(
-            _ix_root(),
+            store_root("index"),
             state["index_chain"],
             lambda ch: _index_key(base_doc_path, id_col, text_col, append=ch),
             retention=chain_retention,
@@ -597,7 +596,7 @@ def stream_document_maintenance(
         )
         if maintain_components:
             _prune_chain_tail(
-                _mh_root(),
+                store_root("components"),
                 state["components_chain"],
                 lambda ch: _components_store_key(
                     base_doc_path, threshold, n, k, id_col, text_col,
@@ -666,8 +665,14 @@ def current_maintained_entries(
     import json
     import os
 
-    from ..operators.dedup import _minhash_store_key
-    from ..operators.search import _index_cache_root, _index_key
+    from ..cache_util import entry_dir, read_tables, store_root
+    from ..operators.dedup import (
+        _DEDUP_STORE_SUBDIRS,
+        _attach_dedup,
+        _components_store_key,
+        _minhash_store_key,
+    )
+    from ..operators.search import _attach_index, _index_key
 
     state_path = os.path.join(checkpoint_dir, "maintenance_chain.json")
     if not os.path.exists(state_path):
@@ -693,70 +698,54 @@ def current_maintained_entries(
         )
     out: dict = {"dedup": None, "index": None, "components": None}
     if state.get("dedup_chain"):
-        from ..operators.dedup import _DEDUP_STORE_SUBDIRS, _minhash_cache_root
-
-        root = _minhash_cache_root()
         ck = _minhash_store_key(
             base_doc_path, n, k, id_col, text_col, append=state["dedup_chain"]
         )
-        final = os.path.join(root, ck)
+        final = entry_dir("minhash", ck)
         _require_complete(
             final,
             "current_maintained_entries (dedup)",
             state["dedup_chain"],
             f"n={n}, k={k}, id_col={id_col!r}, text_col={text_col!r}, "
-            f"minhash cache root={root}",
+            f"minhash cache root={store_root('minhash')}",
         )
-        entry = {"path": final, "append_key": state["dedup_chain"]}
-        for sub in _DEDUP_STORE_SUBDIRS:
-            spark.catalog.refreshByPath(f"{final}/{sub}")
-            entry[sub] = spark.read.parquet(f"{final}/{sub}")
-        out["dedup"] = entry
+        out["dedup"] = {
+            "path": final,
+            "append_key": state["dedup_chain"],
+            **_attach_dedup(
+                spark, final, _DEDUP_STORE_SUBDIRS, n, k, base_doc_path
+            ),
+        }
     if state.get("index_chain"):
         ck = _index_key(
             base_doc_path, id_col, text_col, append=state["index_chain"]
         )
-        final = os.path.join(_index_cache_root(), ck)
+        final = entry_dir("index", ck)
         _require_complete(
             final,
             "current_maintained_entries (index)",
             state["index_chain"],
             f"id_col={id_col!r}, text_col={text_col!r}, "
-            f"index cache root={_index_cache_root()}",
+            f"index cache root={store_root('index')}",
         )
-        with open(os.path.join(final, "_COMPLETE")) as f:
-            meta = json.load(f)
-        spark.catalog.refreshByPath(f"{final}/index")
-        out["index"] = (
-            spark.read.parquet(f"{final}/index"),
-            int(meta["n_docs"]),
-            float(meta["avgdl"]),
-            final,
-        )
+        out["index"] = _attach_index(spark, final)
     if state.get("components_chain"):
-        from ..operators.dedup import (
-            _components_store_key,
-            _minhash_cache_root,
-        )
-
-        root = _minhash_cache_root()
         ck = _components_store_key(
             base_doc_path, threshold, n, k, id_col, text_col,
             append=state["components_chain"],
         )
-        final = os.path.join(root, ck)
+        final = entry_dir("components", ck)
         _require_complete(
             final,
             "current_maintained_entries (components)",
             state["components_chain"],
             f"threshold={threshold}, n={n}, id_col={id_col!r}, "
-            f"text_col={text_col!r}, minhash cache root={root}",
+            f"text_col={text_col!r}, minhash cache root={store_root('components')}",
         )
-        spark.catalog.refreshByPath(f"{final}/components")
         out["components"] = {
             "path": final,
             "append_key": state["components_chain"],
-            "components": spark.read.parquet(f"{final}/components"),
+            **read_tables(spark, final, ("components",)),
         }
     return out
 
@@ -837,17 +826,11 @@ def stream_embedding_maintenance(
         state["last_batch"] = batch_id
         _save(state)
         # chain-entry GC (see _prune_chain_tail)
-        import tempfile
-
+        from ..cache_util import store_root
         from ..operators.similarity import _ivfpq_key
 
         _prune_chain_tail(
-            os.environ.get(
-                "SPARK_GRAFT_CODEBOOK_CACHE",
-                os.path.join(
-                    tempfile.gettempdir(), "spark_graft_codebook_cache"
-                ),
-            ),
+            store_root("codebook"),
             state["chain"],
             lambda ch: _ivfpq_key(
                 base_vec_path, n_centroids, m, ks, n_iter, id_col, vec_col,
@@ -890,8 +873,8 @@ def current_maintained_index(
     reads only."""
     import json
     import os
-    import tempfile
 
+    from ..cache_util import entry_dir, read_tables, store_root
     from ..operators.similarity import _ivfpq_key
 
     state_path = os.path.join(checkpoint_dir, "ivfpq_chain.json")
@@ -901,27 +884,23 @@ def current_maintained_index(
         state = json.load(f)
     if not state.get("chain"):
         return None
-    root = os.environ.get(
-        "SPARK_GRAFT_CODEBOOK_CACHE",
-        os.path.join(tempfile.gettempdir(), "spark_graft_codebook_cache"),
-    )
     ck = _ivfpq_key(
         base_vec_path, n_centroids, m, ks, n_iter, id_col, vec_col,
         append=state["chain"],
     )
-    final = os.path.join(root, ck)
+    final = entry_dir("codebook", ck)
     _require_complete(
         final,
         "current_maintained_index",
         state["chain"],
         f"n_centroids={n_centroids}, m={m}, ks={ks}, n_iter={n_iter}, "
-        f"id_col={id_col!r}, vec_col={vec_col!r}, codebook cache root={root}",
+        f"id_col={id_col!r}, vec_col={vec_col!r}, "
+        f"codebook cache root={store_root('codebook')}",
     )
-    spark.catalog.refreshByPath(f"{final}/index")
     return {
         "path": final,
         "append_key": state["chain"],
-        "index": spark.read.parquet(f"{final}/index"),
+        **read_tables(spark, final, ("index",)),
     }
 
 
@@ -1028,10 +1007,11 @@ def stream_graph_maintenance(
             state["last_batch"] = batch_id
             _save(state)
             # chain-entry GC (see _prune_chain_tail)
-            from ..plans.node_graph import _graph_append_key, _graph_cache_root
+            from ..cache_util import store_root
+            from ..plans.node_graph import _graph_append_key
 
             _prune_chain_tail(
-                _graph_cache_root(),
+                store_root("graph"),
                 state["chain"],
                 lambda ch: _graph_append_key(
                     sf_dir, ch, build_coreness=build_coreness
@@ -1066,11 +1046,8 @@ def current_maintained_graph(
     import json
     import os
 
-    from ..plans.node_graph import (
-        _STORE_SUBDIRS,
-        _graph_append_key,
-        _graph_cache_root,
-    )
+    from ..cache_util import entry_dir, read_tables, store_root
+    from ..plans.node_graph import _entry_tables, _graph_append_key
 
     state_path = os.path.join(checkpoint_dir, "graph_chain.json")
     if not os.path.exists(state_path):
@@ -1080,18 +1057,16 @@ def current_maintained_graph(
     if not state.get("chain"):
         return None
     ck = _graph_append_key(sf_dir, state["chain"], build_coreness=build_coreness)
-    final = os.path.join(_graph_cache_root(), ck)
+    final = entry_dir("graph", ck)
     _require_complete(
         final,
         "current_maintained_graph",
         state["chain"],
         f"sf_dir={sf_dir!r}, build_coreness={build_coreness}, "
-        f"graph cache root={_graph_cache_root()}",
+        f"graph cache root={store_root('graph')}",
     )
-    out: dict = {"path": final, "append_key": state["chain"]}
-    for sub in _STORE_SUBDIRS:
-        if sub == "coreness" and not build_coreness:
-            continue
-        spark.catalog.refreshByPath(f"{final}/{sub}")
-        out[sub] = spark.read.parquet(f"{final}/{sub}")
-    return out
+    return {
+        "path": final,
+        "append_key": state["chain"],
+        **read_tables(spark, final, _entry_tables(build_coreness)),
+    }
