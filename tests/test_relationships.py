@@ -86,6 +86,30 @@ def test_attribute_reference_confidence(attr_refs):
     assert attr_refs[("rating_1", "album_1")]["attribute_name"] == "album_id"
 
 
+def test_name_indicator_folding_matches_lower(spark):
+    """The translate-based case folding must match exactly what
+    lower().contains(...) matches, including the two non-ASCII code
+    points whose lowercase holds an ASCII letter (U+212A, U+0130)."""
+    names = [
+        None, "", "id", "ID", "Album_Id", "LIN\u212a", "\u212aID", "LIN\u212aS",
+        "\u0130D", "CH\u0130LD", "\u0130DS", "\uff29\uff24", "\u0131d", "\u017fource",
+        "SOURCES", "Targets", "genre", "PARENT_REF", "r\u0435f", "R\u0307EF",
+    ]
+    df = spark.createDataFrame([(n,) for n in names], "n string")
+    for indicators in (R._SINGLE_REF_INDICATORS, R._MULTI_REF_INDICATORS):
+        lowered = F.lower(F.col("n"))
+        spec = lowered.contains(indicators[0])
+        for ind in indicators[1:]:
+            spec = spec | lowered.contains(ind)
+        rows = df.select(
+            "n",
+            R._name_contains_any(F.col("n"), indicators).alias("fast"),
+            spec.alias("spec"),
+        ).collect()
+        for r in rows:
+            assert r["fast"] == r["spec"], f"{r['n']!r}: {r['fast']} != {r['spec']}"
+
+
 def test_multi_references(spark):
     nodes = spark.createDataFrame(
         [

@@ -117,6 +117,10 @@ def test_infer_type_matches_regex_spec(spark):
         "xtrue", "2001-07-19", "2001-07-19T10:00", "2001-7-19", "12:34:56",
         "12:34", "12:34:5x", "1234-56-78garbage", "9999-99-99", "customer_1",
         "NSR-0001", "-5", "+5", "5e3", "  7", "7  ", "t", "f",
+        # case mappings outside ASCII: KELVIN SIGN, dotted/dotless i,
+        # full-width, Cyrillic e, long s
+        "\u212aRUE", "TRU\u0130", "\u0131d", "\uff54\uff52\uff55\uff45",
+        "tru\u0435", "\u017false",
     ]
     df = spark.createDataFrame([(c,) for c in cases], "v string")
     rows = df.select(
@@ -173,6 +177,68 @@ def test_sqlite_sink_roundtrip(tmp_path, corpus):
     albums = con.execute("SELECT * FROM nodes WHERE node_type = 'album'").fetchall()
     assert len(albums) == 2
     con.close()
+
+
+def test_sqlite_sink_job_count(tmp_path, spark, corpus):
+    """The sink streams each table through toLocalIterator, one Spark
+    job per partition it pulls. Documents, nodes and properties end in
+    a shuffle (2 jobs each); the cross-references are rebalanced, so
+    their jobs stay constant instead of growing with 6 x (parse
+    partitions) — the detection plan's union width."""
+    from pyspark.sql import functions as F
+
+    from xml_to_sqlite3_spark.operators.relationships import detect_all_relationships
+
+    xrefs = detect_all_relationships(corpus.nodes, corpus.properties).withColumn(
+        "source_file", F.col("document_id")
+    )
+    sc = spark.sparkContext
+    group = "test_sqlite_sink_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        counts = write_corpus_sqlite(
+            corpus, str(tmp_path / "out.sqlite3"), cross_references=xrefs
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert counts["cross_references"] > 0
+    assert len(jobs) <= 12, f"{len(jobs)} sink jobs"
+
+
+def test_sqlite_sink_rewrite_without_xrefs(tmp_path, corpus):
+    """Re-writing documents whose detection now finds no
+    cross-references must still drop their old rows, and a write with
+    no cross-reference rows must still VACUUM."""
+    from pyspark.sql import functions as F
+
+    from xml_to_sqlite3_spark.operators.relationships import detect_all_relationships
+
+    xrefs = detect_all_relationships(corpus.nodes, corpus.properties).withColumn(
+        "source_file", F.col("document_id")
+    )
+    db_path = str(tmp_path / "out.sqlite3")
+    write_corpus_sqlite(corpus, db_path, cross_references=xrefs, optimize=False)
+    counts = write_corpus_sqlite(corpus, db_path, cross_references=xrefs.limit(0))
+    assert counts["cross_references"] == 0
+    con = sqlite3.connect(db_path)
+    assert con.execute("SELECT count(*) FROM cross_references").fetchone()[0] == 0
+    con.close()
+
+
+def test_conversion_plans_skip_case_mapping(corpus):
+    """lower()/upper() start ICU's case mapping in the JVM, about a
+    second on a cold conversion; the conversion path folds ASCII with
+    translate() instead."""
+    from xml_to_sqlite3_spark.operators.relationships import detect_all_relationships
+
+    for df in (
+        corpus.properties,
+        detect_all_relationships(corpus.nodes, corpus.properties),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lower(" not in plan and "upper(" not in plan, plan
 
 
 def test_parquet_sink(tmp_path, spark, corpus):

@@ -95,7 +95,9 @@ def main(argv: list[str] | None = None) -> int:
                 return 2
             os.remove(args.output)
         os.makedirs(os.path.dirname(os.path.abspath(args.output)), exist_ok=True)
-        write_corpus_sqlite(corpus, args.output, cross_references=xrefs, batch_size=args.batch_size)
+        counts = write_corpus_sqlite(
+            corpus, args.output, cross_references=xrefs, batch_size=args.batch_size
+        )
 
     if args.verbose:
         for row in corpus.errors.collect():
@@ -109,7 +111,13 @@ def main(argv: list[str] | None = None) -> int:
         F.countDistinct("node_type").alias("node_types"),
         F.countDistinct("document_id").alias("documents"),
     ).collect()[0]
-    n_xrefs = xrefs.count() if xrefs is not None else 0
+    if xrefs is None:
+        n_xrefs = 0
+    elif args.parquet_out:
+        n_xrefs = xrefs.count()
+    else:
+        # the sink already counted them; counting again re-runs detection
+        n_xrefs = counts["cross_references"]
 
     print(f"Conversion complete! ({time.perf_counter() - t0:.1f}s)")
     print("\nDatabase Statistics:")

@@ -12,6 +12,15 @@ regexes (regex evaluation dominated the property-build profile at
 ~5s per 4M values); ``infer_type_regex`` keeps the literal regex
 formulation as the executable spec, and a test asserts the two are
 byte-identical over adversarial inputs.
+
+The boolean check folds case with ``translate`` over the letters of
+``true``/``false`` instead of ``lower()``. The first ``lower()`` in a
+JVM loads ICU's case mapping, about a second of start-up on a cold
+conversion, and the check needs only ASCII. The result is the same as
+``lower()`` on every input: the only non-ASCII code points whose
+lowercase contains an ASCII letter are U+212A KELVIN SIGN (to ``k``,
+which neither word contains) and U+0130 (to ``i`` + U+0307, which
+neither word can contain).
 """
 
 from __future__ import annotations
@@ -75,6 +84,9 @@ def infer_type(value: Column) -> Column:
             .when(is_date | is_time, F.lit("datetime"))
             .otherwise(F.lit("string")),
         )
-        .when(F.lower(value).isin("true", "false"), F.lit("boolean"))
+        .when(
+            F.translate(value, "TRUEFALS", "truefals").isin("true", "false"),
+            F.lit("boolean"),
+        )
         .otherwise(F.lit("string"))
     )

@@ -60,8 +60,17 @@ def _rel(source, target, rtype, attribute, confidence, document):
     ]
 
 
+# ASCII case folding plus U+212A KELVIN SIGN -> k: the same matches as
+# lower() for ASCII indicators, without loading ICU's case mapping
+# (about a second of JVM start-up on a cold conversion). U+212A and
+# U+0130 are the only non-ASCII code points whose lowercase contains an
+# ASCII letter; U+0130 lowers to i + U+0307, which no indicator holds.
+_FOLD_FROM = "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u212a"
+_FOLD_TO = "abcdefghijklmnopqrstuvwxyzk"
+
+
 def _name_contains_any(name_col, indicators) -> F.Column:
-    lowered = F.lower(name_col)
+    lowered = F.translate(name_col, _FOLD_FROM, _FOLD_TO)
     return reduce(
         lambda acc, ind: acc | lowered.contains(ind),
         indicators[1:],

@@ -7,9 +7,19 @@ reference can point their existing SQL at our output unchanged.
 
 SQLite is inherently a single-writer file — the reference serializes
 all writes through one fiber too (lib/database_writer.rb). We stream
-partitions to the driver via toLocalIterator (bounded memory) and
-batch-insert. This is the COMPAT path for modest outputs; the scale
-path is parquet_sink.
+partitions to the driver via toLocalIterator and batch-insert. This is
+the COMPAT path for modest outputs; the scale path is parquet_sink.
+
+Driver memory stays bounded: each table streams with
+``prefetchPartitions=True``, so at most two partitions are on the
+driver at once (the one being inserted and the next), and every stream
+reads the output of a shuffle, so AQE sizes those partitions by bytes.
+toLocalIterator runs one Spark job per partition. The documents,
+nodes and properties queries end in a shuffle already (group-by,
+dedupe window). The cross-reference plan does not: it is a union of
+branches over broadcast joins, 6 x (parse partitions) partitions, so
+it is streamed through a rebalance, which keeps the sink's job count
+constant (12 per conversion) whatever the parse's partition count.
 """
 
 from __future__ import annotations
@@ -18,6 +28,7 @@ import sqlite3
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..sources.xml_source import XmlCorpus, dedupe_last_writer
 
@@ -123,6 +134,35 @@ def _insert_stream(
     return n
 
 
+_DOCUMENT_COLS = ("id", "filename", "file_size", "file_hash")
+_NODE_COLS = ("id", "node_type", "document_id", "parent_id", "position", "content", "xpath")
+_PROPERTY_COLS = ("node_id", "property_name", "property_value", "data_type")
+_XREF_COLS = (
+    "source_node_id",
+    "target_node_id",
+    "reference_type",
+    "attribute_name",
+    "confidence",
+    "source_file",
+)
+
+
+def _upsert_sql(table: str, cols: tuple[str, ...]) -> str:
+    return "INSERT OR REPLACE INTO %s (%s) VALUES (%s)" % (
+        table,
+        ", ".join(cols),
+        ", ".join("?" * len(cols)),
+    )
+
+
+def _stream(df: DataFrame) -> Iterable[tuple]:
+    """Rows of ``df`` in column order. ``Row`` is a tuple, so they go
+    to ``executemany`` as they are. Prefetch launches the next
+    partition's job while this one is inserted: at most two partitions
+    are on the driver at once."""
+    return df.toLocalIterator(prefetchPartitions=True)
+
+
 def write_corpus_sqlite(
     corpus: XmlCorpus,
     db_path: str,
@@ -131,7 +171,11 @@ def write_corpus_sqlite(
     optimize: bool = True,
 ) -> dict[str, int]:
     """Write the corpus (and optionally detected relationships) to a
-    reference-schema SQLite database. Returns per-table row counts."""
+    reference-schema SQLite database. Returns per-table row counts.
+
+    A ``source_file`` column on ``cross_references`` is written as is;
+    without one the column is NULL, as the reference's adapters leave
+    it."""
     con = sqlite3.connect(db_path)
     con.execute("PRAGMA journal_mode = WAL")
     con.execute("PRAGMA foreign_keys = OFF")
@@ -140,19 +184,18 @@ def write_corpus_sqlite(
     counts: dict[str, int] = {}
 
     # documents are already unique by construction (corpus_from_parsed
-    # groups by document_id) — no dedupe window needed here
-    docs = corpus.documents
+    # groups by document_id) — no dedupe window needed here. Their ids
+    # are kept as they stream by: the cross-reference delete below
+    # needs them, and re-running the query would cost another job.
+    doc_ids: list = []
+
+    def documents() -> Iterable[tuple]:
+        for r in _stream(corpus.documents.select(*_DOCUMENT_COLS)):
+            doc_ids.append(r[0])
+            yield r
+
     counts["documents"] = _insert_stream(
-        con,
-        "INSERT OR REPLACE INTO documents (id, filename, file_size, file_hash)"
-        " VALUES (?, ?, ?, ?)",
-        (
-            (r["id"], r["filename"], r["file_size"], r["file_hash"])
-            for r in docs.select(
-                "id", "filename", "file_size", "file_hash"
-            ).toLocalIterator()
-        ),
-        batch_size,
+        con, _upsert_sql("documents", _DOCUMENT_COLS), documents(), batch_size
     )
 
     # Resolve duplicate primary keys by parse ordinal BEFORE
@@ -163,22 +206,8 @@ def write_corpus_sqlite(
     nodes = dedupe_last_writer(corpus.nodes, ["id"], "ordinal")
     counts["nodes"] = _insert_stream(
         con,
-        "INSERT OR REPLACE INTO nodes (id, node_type, document_id, parent_id, position,"
-        " content, xpath) VALUES (?, ?, ?, ?, ?, ?, ?)",
-        (
-            (
-                r["id"],
-                r["node_type"],
-                r["document_id"],
-                r["parent_id"],
-                r["position"],
-                r["content"],
-                r["xpath"],
-            )
-            for r in nodes.select(
-                "id", "node_type", "document_id", "parent_id", "position", "content", "xpath"
-            ).toLocalIterator()
-        ),
+        _upsert_sql("nodes", _NODE_COLS),
+        _stream(nodes.select(*_NODE_COLS)),
         batch_size,
     )
 
@@ -187,14 +216,8 @@ def write_corpus_sqlite(
     )
     counts["node_properties"] = _insert_stream(
         con,
-        "INSERT OR REPLACE INTO node_properties (node_id, property_name, property_value,"
-        " data_type) VALUES (?, ?, ?, ?)",
-        (
-            (r["node_id"], r["property_name"], r["property_value"], r["data_type"])
-            for r in properties.select(
-                "node_id", "property_name", "property_value", "data_type"
-            ).toLocalIterator()
-        ),
+        _upsert_sql("node_properties", _PROPERTY_COLS),
+        _stream(properties.select(*_PROPERTY_COLS)),
         batch_size,
     )
 
@@ -204,23 +227,20 @@ def write_corpus_sqlite(
         # documents would silently duplicate every xref row. Delete
         # the rows previously written for these source files first
         # (same idempotence contract as the streaming path).
-        _delete_xrefs_on(con, [r["id"] for r in docs.select("id").toLocalIterator()])
+        _delete_xrefs_on(con, doc_ids)
+        xrefs = cross_references.select(
+            *_XREF_COLS[:-1],
+            F.col("source_file")
+            if "source_file" in cross_references.columns
+            else F.lit(None).cast("string").alias("source_file"),
+        )
+        # The detection plan is a union of branches over broadcast
+        # joins: 6 x (parse partitions) partitions, and one job each
+        # to stream. The rebalance lets AQE size them by bytes.
         counts["cross_references"] = _insert_stream(
             con,
-            "INSERT OR REPLACE INTO cross_references (source_node_id, target_node_id,"
-            " reference_type, attribute_name, confidence, source_file)"
-            " VALUES (?, ?, ?, ?, ?, ?)",
-            (
-                (
-                    r["source_node_id"],
-                    r["target_node_id"],
-                    r["reference_type"],
-                    r["attribute_name"],
-                    r["confidence"],
-                    r["source_file"] if "source_file" in r else None,
-                )
-                for r in cross_references.toLocalIterator()
-            ),
+            _upsert_sql("cross_references", _XREF_COLS),
+            _stream(xrefs.hint("rebalance")),
             batch_size,
         )
 
@@ -232,52 +252,18 @@ def write_corpus_sqlite(
     return counts
 
 
-def _delete_xrefs_on(con: sqlite3.Connection, source_files: list) -> int:
+def _delete_xrefs_on(con: sqlite3.Connection, source_files: list) -> None:
     """Chunked DELETE of cross_references rows by source_file on an
-    open connection (500 placeholders per statement — one per file
-    would exceed SQLite's bound-variable limit on backlog drains).
-    Tolerates the table not existing yet (first write)."""
-    deleted = 0
-    try:
-        for i in range(0, len(source_files), 500):
-            chunk = source_files[i : i + 500]
-            if not chunk:
-                continue
-            cur = con.execute(
-                "DELETE FROM cross_references WHERE source_file IN (%s)"
-                % ",".join("?" * len(chunk)),
-                chunk,
-            )
-            deleted += cur.rowcount
-    except sqlite3.OperationalError as e:
-        if "no such table" not in str(e):
-            raise
-    return deleted
-
-
-def delete_xrefs_for_sources(db_path: str, source_files: list) -> int:
-    """Drop the cross_references rows previously written for these
-    source files. cross_references has a synthetic autoincrement PK
-    (db/migrate/001, matching the reference), so INSERT OR REPLACE
-    cannot dedupe a replayed batch — idempotent relationship
-    maintenance is delete-then-insert keyed on source_file. Returns
-    rows deleted; a missing database (first batch) deletes nothing.
-    """
-    import os
-
-    if not source_files or not os.path.exists(db_path):
-        return 0
-    con = sqlite3.connect(db_path)
-    try:
-        deleted = _delete_xrefs_on(con, list(source_files))
-        con.commit()
-        return deleted
-    except sqlite3.OperationalError as e:
-        # ONLY the first-batch missing-table case is benign; a locked
-        # database etc. must propagate — swallowing it would skip the
-        # delete and break replay idempotence (duplicate xref rows)
-        if "no such table" in str(e):
-            return 0
-        raise
-    finally:
-        con.close()
+    open, migrated connection (500 placeholders per statement — one
+    per file would exceed SQLite's bound-variable limit on backlog
+    drains). Commits: with no rows to insert after it, an open
+    transaction would be rolled back at close (and VACUUM refuses to
+    run inside one)."""
+    for i in range(0, len(source_files), 500):
+        chunk = source_files[i : i + 500]
+        con.execute(
+            "DELETE FROM cross_references WHERE source_file IN (%s)"
+            % ",".join("?" * len(chunk)),
+            chunk,
+        )
+    con.commit()
